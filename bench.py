@@ -215,7 +215,6 @@ def main() -> None:
     # the final JSON line and eat the driver's limited tail buffer.
     spark = get_spark(
         app_name="dqps-bench",
-        driver_memory="64g",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 

@@ -66,12 +66,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def spread(df: DataFrame) -> DataFrame:
-    """Public alias of `_spread` for other CPU-heavy map pipelines
-    (corpus prep, workload compositions)."""
-    return _spread(df)
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Shingling/hashing stages are CPU-bound maps, so their
     parallelism equals the number of input splits — a small parquet
@@ -118,15 +112,15 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     the cached intermediate and every downstream exchange by ~4x.
 
     Identity contract: xxhash64 is injective on every tested corpus
-    (artifacts/collision_check_r12.py asserts count(distinct gram) ==
-    count(distinct hash) at sf0.001/0.01/0.1, so all derived results
-    are BIT-IDENTICAL to the string form there). At 10^12 distinct
-    shingles (100 TB) the birthday bound expects ~27k colliding PAIRS
-    corpus-wide; a collision only perturbs a result when both grams
-    co-occur in one candidate pair — the same p≈2^-64 trade the LSH
-    band keys already make. The 32-bit masked hash the MinHash
-    permutations consume is derived as hs64 & 0xFFFFFFFF, exactly the
-    xxhash64(g).bitwiseAND(...) the string pipeline computed.
+    (tests/test_property.py::test_xxhash64_shingle_identity asserts
+    count(distinct gram) == count(distinct hash) for the 3-grams and
+    the 8-grams; the r12 run found the same at sf0.01 and sf0.1), so
+    all derived results are BIT-IDENTICAL to the string form there.
+    At 10^12 distinct shingles (100 TB) the birthday bound expects
+    ~27k colliding PAIRS corpus-wide; a collision only perturbs a
+    result when both grams co-occur in one candidate pair — the same
+    p≈2^-64 trade the LSH band keys already make. `_signature` derives the 32-bit masked
+    hash the MinHash permutations consume.
 
     Tokens materialize in their own projection — see doc_shingles."""
     return (
@@ -142,16 +136,13 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     )
 
 
-def shingle_hashes(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles → 32-bit hashes."""
-    grams = F.array_distinct(word_ngrams(tokens(text_col), n))
-    return F.transform(grams, lambda g: F.xxhash64(g).bitwiseAND(F.lit(0xFFFFFFFF)))
+def _signature(hs_df: DataFrame) -> DataFrame:
+    """(doc_id, hs64: the 64-bit shingle hashes of `doc_shingle_hashes`)
+    → (doc_id, sig): sig[i] = min over shingles of (a_i*h + b_i) mod p,
+    h = hs64 & 0xFFFFFFFF — exactly the xxhash64(gram) & 0xFFFFFFFF a
+    gram-string pipeline would feed the permutations.
 
-
-def _signature_from_shingles(grams_df: DataFrame) -> DataFrame:
-    """(doc_id, grams) → (doc_id, sig).
-
-    The shingle-hash array is materialized in its own projection and
+    The masked hash array is materialized in its own projection and
     the permutation fold references that attribute. Inlining the hash
     pipeline into the fold (one projection) makes the expression tree
     ~64× larger — Catalyst and codegen choke on it (30s+ of
@@ -165,30 +156,10 @@ def _signature_from_shingles(grams_df: DataFrame) -> DataFrame:
     per-permutation array_min(transform(...)) — 64 separate array
     traversals — which measured 2.2× slower at sf0.1 and produced
     bit-identical signatures)."""
-    with_hashes = grams_df.select(
+    with_hashes = hs_df.select(
         "doc_id",
-        F.transform("grams", lambda g: F.xxhash64(g).bitwiseAND(F.lit(0xFFFFFFFF))).alias("hs"),
+        F.transform("hs64", lambda h: h.bitwiseAND(F.lit(0xFFFFFFFF))).alias("hs"),
     )
-    return _signature_from_hash32(with_hashes)
-
-
-def _signature_from_hashes64(hs_df: DataFrame) -> DataFrame:
-    """(doc_id, hs64) → (doc_id, sig): signatures from the 64-bit
-    shingle-hash proxy. Masking to 32 bits reproduces exactly the
-    hs the string pipeline fed the permutation fold, so signatures
-    are bit-identical to `_signature_from_shingles`."""
-    return _signature_from_hash32(
-        hs_df.select(
-            "doc_id",
-            F.transform("hs64", lambda h: h.bitwiseAND(F.lit(0xFFFFFFFF))).alias("hs"),
-        )
-    )
-
-
-def _signature_from_hash32(with_hashes: DataFrame) -> DataFrame:
-    """(doc_id, hs: array<bigint> of 32-bit-masked shingle hashes) →
-    (doc_id, sig). Shared tail of both signature entries; see
-    `_signature_from_shingles` for the fold design notes."""
     consts_a = F.array(*[F.lit(a) for a, _ in PERMS])
     consts_b = F.array(*[F.lit(b) for _, b in PERMS])
     init = F.expr(f"array_repeat(CAST(NULL AS BIGINT), {NUM_PERMS})")
@@ -207,7 +178,7 @@ def _signature_from_hash32(with_hashes: DataFrame) -> DataFrame:
 def minhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-doc MinHash signature: sig[i] = min over shingles of
     (a_i*h + b_i) mod p. Pure scan-side map — no shuffle, no UDF."""
-    return _signature_from_shingles(doc_shingles(df, id_col, text_col))
+    return _signature(doc_shingle_hashes(df, id_col, text_col))
 
 
 LSH_BUCKET_CAP = 50  # successors each doc pairs with inside one (band, key) bucket
@@ -469,7 +440,6 @@ def minhash_dedup_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: signatures → banded candidates →
     exact-Jaccard verification of the CANDIDATE PAIRS ONLY (join each
@@ -480,7 +450,7 @@ def minhash_dedup_pairs(
     set (which is what the DuckDB oracle computes quadratically).
 
     The shingle pipeline feeds three consumers (signatures + both
-    verify sides). Default is persist: one tokenize+shingle pass
+    verify sides). It is persisted: one tokenize+shingle pass
     populates a MEMORY_AND_DISK cache that all three branches read
     (cold-cache per call: parity at sf0.1 — 2.47 s vs 2.39 s — and
     −27% at sf1, 5.1 s vs 7.0 s, where the three recomputed corpus
@@ -490,11 +460,9 @@ def minhash_dedup_pairs(
     candidate-doc shingles behind a broadcast+repartition (the
     broadcast barrier serializes the critical path that the
     recompute-per-branch plan overlaps — sf1 7.6 s), and persist
-    combined with that scoping (10.3 s). ``persist_shingles=False``
-    recomputes per branch for memory-constrained executors — at
-    100 TB the better form of the same idea is checkpointing the
-    shingle table to parquet so all three consumers scan columnar
-    storage.
+    combined with that scoping (10.3 s). At 100 TB the better form of
+    the same idea is checkpointing the shingle table to parquet so all
+    three consumers scan columnar storage.
 
     CACHE LIFECYCLE: the persist is lazy and this function returns an
     unmaterialized DataFrame, so nothing here can unpersist it —
@@ -509,12 +477,11 @@ def minhash_dedup_pairs(
     hash sets), so the cached bytes and the two verify-join exchanges
     carry 8-byte longs instead of ~30-byte strings. Equivalence to
     the string pipeline: injective on every tested corpus
-    (collision_check_r12.py) → bit-identical results; see
-    doc_shingle_hashes for the 100 TB collision analysis."""
-    grams = doc_shingle_hashes(df, id_col, text_col)
-    if persist_shingles:
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-    cands = lsh_candidate_pairs(_signature_from_hashes64(grams))
+    (tests/test_property.py::test_xxhash64_shingle_identity) →
+    bit-identical results; see doc_shingle_hashes for the 100 TB
+    collision analysis."""
+    grams = doc_shingle_hashes(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    cands = lsh_candidate_pairs(_signature(grams))
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("hs64").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("hs64").alias("grams_b"))
     return (
@@ -830,8 +797,9 @@ def substring_dup_spans(
     # exchange + window sort then carry an 8-byte long instead of a
     # ~50-byte k-gram string. Identity contract as doc_shingle_hashes
     # (injective on every tested corpus, 8-gram check in
-    # artifacts/COLLISION_CHECK_r12.json; at 100 TB a colliding pair
-    # adds a spurious duplicated mark with p≈2^-64 per gram pair).
+    # tests/test_property.py::test_xxhash64_shingle_identity; at
+    # 100 TB a colliding pair adds a spurious duplicated mark with
+    # p≈2^-64 per gram pair).
     g = (
         df.select(F.col(id_col).alias("doc_id"), toks_f.alias("toks"))
         .select("doc_id", grams_f.alias("grams"))

@@ -31,6 +31,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from database_query_processor_spark.operators import vector_kernels as VK
+
 NUM_HYPERPLANES = 6
 _EMB_DIM = 64
 
@@ -259,25 +261,6 @@ IVF_CELLS = 8
 IVF_NPROBE = 2
 
 
-def _py_dot(a, b) -> float:
-    """Driver-side double dot product, sequential — bit-identical to
-    dot_d / sql_dot (same fold order, same IEEE ops)."""
-    s = 0.0
-    for x, y in zip(a, b):
-        s += float(x) * float(y)
-    return s
-
-
-def _py_cos(a, b) -> float:
-    import math
-
-    nrm = math.sqrt(_py_dot(a, a)) * math.sqrt(_py_dot(b, b))
-    # zero-norm vector: cosine is undefined — treat as no similarity
-    # (0.0) instead of a driver-side ZeroDivisionError; the Spark-side
-    # `cosine` expression degrades the same comparison-neutral way.
-    return _py_dot(a, b) / nrm if nrm else 0.0
-
-
 def _ids_codebook(df: DataFrame, id_col: str, vec_col: str, cells: int) -> list[tuple[int, list[float]]]:
     """Deterministic codebook: the vectors of the ``cells`` smallest
     ids (oracle-reproducible in plain SQL)."""
@@ -291,16 +274,22 @@ def _ids_codebook(df: DataFrame, id_col: str, vec_col: str, cells: int) -> list[
 
 
 def _kmeans_codebook(
-    df: DataFrame, vec_col: str, cells: int, seed: int = 42, sample_cap: int = 100_000
+    df: DataFrame, id_col: str, vec_col: str, cells: int, seed: int = 42, sample_cap: int = 100_000
 ) -> list[tuple[int, list[float]]]:
     """KMeans-trained codebook (pyspark.ml) — the production centroid
     quality path. Fit runs on a bounded deterministic sample (the fit
     is iterative over its input, so cap it; centroid quality needs a
     representative sample, not the corpus), and only the ``cells``
-    centers ever leave the JVM. cent_id = center index."""
+    centers ever leave the JVM. cent_id = center index.
+
+    The fit input is ONE id-sorted partition: the sample draw and the
+    k-means|| seeding run per partition, so the scan's layout (which
+    follows defaultParallelism) made the centroids depend on the core
+    count. ``sample_cap`` bounds what the one fit task reads."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    df = df.repartition(1).sortWithinPartitions(id_col)
     n = df.count()
     sample = df if n <= sample_cap else df.sample(fraction=sample_cap / n, seed=seed)
     feats = sample.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
@@ -315,7 +304,7 @@ def _resolve_codebook(
     'ids' (deterministic, oracle-reproducible) or 'kmeans' (balanced
     cells, the production knob)."""
     if codebook == "kmeans":
-        return _kmeans_codebook(df.select(vec_col), vec_col, cells)
+        return _kmeans_codebook(df.select(id_col, vec_col), id_col, vec_col, cells)
     if codebook == "ids":
         return _ids_codebook(df, id_col, vec_col, cells)
     raise ValueError(f"unknown codebook {codebook!r} (want 'ids' or 'kmeans')")
@@ -328,7 +317,8 @@ def _assign_cells(
     df: DataFrame, id_col: str, vec_col: str, cents: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """argmax-cosine Voronoi assignment of every vector to its nearest
-    centroid; ties break to the smaller cent_id. Both paths are
+    centroid; ties break to the lower codebook index (the smaller
+    cent_id: codebooks are in cent_id order). Both paths are
     scan-side (no shuffle); the split is about EXPRESSION size:
 
     * ≤ _ASSIGN_LITERAL_MAX (64) cells: literal argmax (one cosine
@@ -339,52 +329,42 @@ def _assign_cells(
       planning/codegen for tens of minutes (measured: cells=316 on
       100k vectors never finished; the Arrow path does it in
       seconds). The centroid matrix ships in the task closure and
-      each Arrow batch is ONE BLAS matmul + argmax. Ties still go to
-      the smaller cent_id (rows sorted by cid, np.argmax takes the
-      first max), though cosine values may differ from the JVM fold
-      in the last ulp — this is the production path, not the
-      oracle-parity path."""
+      each Arrow batch is ONE BLAS matmul + first-max argmax
+      (vector_kernels.argmax_cosine_blas, with its last-ulp caveat) —
+      this is the production path, not the oracle-parity path."""
     if len(cents) <= _ASSIGN_LITERAL_MAX:
+        # the negated codebook index breaks cosine ties; the cent_id
+        # rides along uncompared (the index is unique), so it may be
+        # any orderable id type
         best = F.greatest(
             *[
                 F.struct(
                     cosine(F.col(vec_col), _lit_vec([float(x) for x in cv])).alias("c"),
-                    F.lit(-cid).alias("nid"),
+                    F.lit(-j).alias("nj"),
+                    F.lit(cid).alias("cell"),
                 )
-                for cid, cv in cents
+                for j, (cid, cv) in enumerate(cents)
             ]
         )
-        return df.select(
-            F.col(id_col), F.col(vec_col), (-best.getField("nid")).alias("cell")
-        )
+        return df.select(F.col(id_col), F.col(vec_col), best.getField("cell").alias("cell"))
 
-    import numpy as np
-
-    ordered = sorted(cents, key=lambda cc: cc[0])
-    cid_arr = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    C = np.array([cv for _, cv in ordered], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+    cells = [cid for cid, _ in cents]
+    codebook = VK.matrix([cv for _, cv in cents], vec_col)
     id_t = df.schema[id_col].dataType.simpleString()
     vec_t = df.schema[vec_col].dataType.simpleString()
-    schema = f"`{id_col}` {id_t}, `{vec_col}` {vec_t}, cell long"
+    cell_t = "string" if isinstance(cells[0], str) else "long"
+    schema = f"`{id_col}` {id_t}, `{vec_col}` {vec_t}, cell {cell_t}"
 
     def assign(batches):
         import pandas as pd
 
+        cell_ids = pd.Series(cells).to_numpy()
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            best_idx = np.argmax(Vn @ Cn.T, axis=1)
+            best = VK.argmax_cosine_blas(VK.matrix(pdf[vec_col], vec_col), codebook)
             yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": cid_arr[best_idx],
-                }
+                {id_col: pdf[id_col], vec_col: pdf[vec_col], "cell": cell_ids[best]}
             )
 
     return df.select(id_col, vec_col).mapInPandas(assign, schema)
@@ -420,7 +400,6 @@ def ann_ivf_topk(
     ``cell`` turns probing into partition pruning: a query touches
     nprobe/cells of the data."""
     cents = _resolve_codebook(df, id_col, vec_col, cells, codebook)
-    cent_rows = [{"cent_id": cid, "cv": cv} for cid, cv in cents]
     q_row = df.filter(F.col(id_col) == query_id).select(vec_col).first()
     if q_row is None:
         # Absent query id: empty result, the same contract as
@@ -432,12 +411,8 @@ def ann_ivf_topk(
             F.lit(None).cast("double").alias("cos"),
         ).limit(0)
     qv = [float(x) for x in q_row[0]]
-    probe_ids = [
-        cid
-        for _, cid in sorted(
-            ((-_py_cos(qv, [float(x) for x in r["cv"]]), r["cent_id"]) for r in cent_rows)
-        )[:nprobe]
-    ]
+    cos = VK.cosines(VK.matrix([cv for _, cv in cents], vec_col), VK.matrix([qv], vec_col)[0])
+    probe_ids = [cents[j][0] for j in VK.top_first(cos, nprobe)]
     assigned = _assign_cells(df, id_col, vec_col, cents)
     return (
         assigned.filter(F.col(id_col) != query_id)
@@ -464,15 +439,6 @@ def _l2sq(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _py_l2sq(a, b) -> float:
-    """Driver-side mirror of _l2sq (same fold order and IEEE ops)."""
-    s = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        s += d * d
-    return s
 
 
 def ann_pq_rerank(
@@ -514,11 +480,10 @@ def ann_pq_rerank(
     cosine contract.
 
     Scale shape (100 TB): ONE bounded collect (ncodes rows); encode
-    is a scan-side literal expression (m·ncodes small 8-dim folds —
-    far below the IVF literal-argmax cliff documented at
-    _ASSIGN_LITERAL_MAX); at scale the codes column is materialized
-    once and the ADC scan reads m bytes/vector instead of the float
-    corpus, with the distance tables riding the task closure."""
+    is a scan-side Arrow kernel (no shuffle); at scale the codes
+    column is materialized once and the ADC scan reads m bytes/vector
+    instead of the float corpus, with the distance tables riding the
+    task closure."""
     cents = _ids_codebook(df, id_col, vec_col, ncodes)
     q_row = df.filter(F.col(id_col) == query_id).select(vec_col).first()
     if q_row is None:
@@ -532,56 +497,23 @@ def ann_pq_rerank(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     d = dim // m
-    # driver-side query↔centroid distance tables: T[s][j], O(m·ncodes·d)
-    tables = [
-        [
-            _py_l2sq(qv[s * d : (s + 1) * d], cv[s * d : (s + 1) * d])
-            for _, cv in cents
-        ]
-        for s in range(m)
-    ]
-    # per-subspace encode: argmin L2² over the codebook, ties to the
-    # smaller code index; then ADC = left-assoc sum of table lookups
-    # in subspace order. Since r12 this runs as an Arrow-batched numpy
-    # kernel (guide §4.3) — the expression form was m·ncodes (128)
-    # interpreted 8-dim folds per ROW (CodegenFallback), ~8 s of
-    # x66's 9 s at sf0.1 (OPTIMIZATION_r12.md §16 has the
-    # decomposition). Bit-equality with the expression form: per-(row, code)
-    # L2² is the same (x−y)·(x−y) float64 products accumulated by
-    # np.cumsum in the fold's left-to-right order; np.argmin returns
-    # the FIRST minimum = the sort_array (dist, j) tie-break; the ADC
-    # sum adds per-subspace lookups in the same left-assoc order; the
-    # distance tables are the same driver-computed float64 values.
-    cent_subs = [
-        [
-            [float(x) for x in cv[s * d : (s + 1) * d]]
-            for _, cv in cents
-        ]
-        for s in range(m)
-    ]
+    # driver-side query↔centroid distance tables T[s][j], O(m·ncodes·d).
+    # The encode is an Arrow kernel since r12: the expression form's
+    # m·ncodes interpreted folds per ROW were ~8 s of x66's 9 s at sf0.1
+    # (OPTIMIZATION_r12.md §16).
+    cent_mat = VK.matrix([cv for _, cv in cents], vec_col)
+    q = VK.matrix([qv], vec_col)[0]
+    codebooks = [cent_mat[:, s * d : (s + 1) * d] for s in range(m)]
+    tables = [VK.l2sq(cb, q[s * d : (s + 1) * d]) for s, cb in enumerate(codebooks)]
 
     def _encode(batches):
-        import numpy as np
         import pandas as pd
 
-        cb = [np.array(cs, dtype=np.float64) for cs in cent_subs]  # m × (ncodes, d)
-        tabs = [np.array(t, dtype=np.float64) for t in tables]  # m × (ncodes,)
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64, copy=False)
-            acc = None
-            for s in range(m):
-                sub = mat[:, s * d : (s + 1) * d]
-                dm = np.empty((len(pdf), len(cb[s])), dtype=np.float64)
-                for j in range(len(cb[s])):
-                    diff = sub - cb[s][j]
-                    dm[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
-                t = tabs[s][np.argmin(dm, axis=1)]
-                acc = t if acc is None else acc + t
-            yield pd.DataFrame(
-                {"_id": pdf["_id"], "_v": pdf["_v"], "_approx": acc}
-            )
+            approx = VK.adc_distances(VK.matrix(pdf["_v"], vec_col), codebooks, tables)
+            yield pd.DataFrame({"_id": pdf["_id"], "_v": pdf["_v"], "_approx": approx})
 
     encoded = df.filter(F.col(id_col) != query_id).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
@@ -654,7 +586,6 @@ ORDER BY cos DESC, cand.vec_id ASC LIMIT {k}
 
 
 DUP_BANDS = 3
-_BITS_PER_BAND = NUM_HYPERPLANES // DUP_BANDS
 
 
 def embedding_dup_pairs(
@@ -687,14 +618,10 @@ def embedding_dup_pairs(
     3 s join skeleton (artifacts/DOT_SHAPE_AB_r12.json; a flat 64-term
     codegen chain measured 2x WORSE — it trips the huge-method limit).
     numpy does the same pair space as one vectorized product per
-    bucket row block. BIT-EQUALITY with the fold (and so with the
-    DuckDB oracle): products are the same float64 multiplies and
-    np.cumsum accumulates them in the same left-to-right order as the
-    sequential aggregate() — the only divergence is a ±0.0 sign on
-    all-zero dots, which the ``cos >= threshold`` gate filters on both
-    sides (threshold > 0); zero-norm vectors give nan here vs NULL in
-    try_divide, equally excluded. Pinned by
-    tests/test_recall.py (banded-vs-exact) and the x05 oracle.
+    bucket row block (vector_kernels.cosine_pairs), bit-identical to
+    the fold and so to the DuckDB oracle (argument in vector_kernels).
+    Pinned by tests/test_recall.py (banded-vs-exact) and the x05
+    oracle.
 
     SIZING (measured, SCALE.md 10x probe): bucket count per band is
     2^(num_planes/bands), a CONSTANT — so expected bucket size grows
@@ -757,48 +684,15 @@ def embedding_dup_pairs(
     ).select("_id", "_v", F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval"))
 
     def _verify(pdf):
-        import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "id_a": np.array([], dtype=np.int64),
-                "id_b": np.array([], dtype=np.int64),
-                "cos": np.array([], dtype=np.float64),
-            }
-        )
-        m = len(pdf)
-        if m < 2:
-            return empty
-        order = np.argsort(pdf["_id"].to_numpy(), kind="stable")
-        ids = pdf["_id"].to_numpy()[order]
-        mat = np.stack(pdf["_v"].to_numpy()[order]).astype(np.float64, copy=False)
-        # sequential (cumsum) accumulation = the aggregate() fold's
-        # left-to-right order — bit-identical survivors (see docstring)
-        nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-        out_a, out_b, out_c = [], [], []
-        for i in range(m - 1):
-            dots = np.cumsum(mat[i] * mat[i + 1 :], axis=1)[:, -1]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (nrm[i] * nrm[i + 1 :])
-            keep = cos >= threshold  # nan (zero-norm) fails, like NULL
-            if keep.any():
-                out_a.append(np.full(int(keep.sum()), ids[i], dtype=np.int64))
-                out_b.append(ids[i + 1 :][keep])
-                out_c.append(cos[keep])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos": np.concatenate(out_c),
-            }
-        )
+        id_a, id_b, cos = VK.cosine_pairs(pdf["_id"].to_numpy(), pdf["_v"], vec_col, threshold)
+        return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cos": cos})
 
+    id_t = df.schema[id_col].dataType.simpleString()
     return (
         bands_df.groupBy("band", "bval")
-        .applyInPandas(_verify, "id_a long, id_b long, cos double")
+        .applyInPandas(_verify, f"id_a {id_t}, id_b {id_t}, cos double")
         .distinct()
     )
 
@@ -908,13 +802,13 @@ def semantic_dedup(
 
     Drop rule = "∃ lower-id in-cluster neighbor ≥ tau" (not greedy
     chain removal): deterministic, order-free — the published SemDeDup
-    approximation. The within-cell pair scan is the same Arrow-batched
-    numpy kernel as embedding_dup_pairs' verify (r12, guide §4.3): the
-    r11 self-join evaluated THREE interpreted fold dots per candidate
-    pair in the join filter (cosine un-hoisted); the kernel does one
-    vectorized product block per row with cumsum accumulation —
-    bit-identical survivors for tau > 0 (see embedding_dup_pairs'
-    docstring for the float-order argument).
+    approximation. The within-cell pair scan is the same id-sorted
+    pair-block scan as embedding_dup_pairs' verify
+    (vector_kernels.near_dup_ids; r12, guide §4.3): the r11 self-join
+    evaluated THREE interpreted fold dots per candidate pair in the
+    join filter (cosine un-hoisted); the kernel does one vectorized
+    product block per row — bit-identical survivors for tau > 0
+    (argument in vector_kernels).
 
     Scale shape (100 TB): codebook is tiny (collected + broadcast
     into a literal argmax — assignment is scan-side, no shuffle);
@@ -938,27 +832,13 @@ def semantic_dedup(
         StorageLevel.MEMORY_AND_DISK
     )
     def _drop(pdf):
-        import numpy as np
         import pandas as pd
 
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"_dropped_id": np.array([], dtype=np.int64)})
-        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        mat = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64, copy=False)
-        nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-        dropped = np.zeros(m, dtype=bool)
-        # pair (i < j): j is dropped if cos(i, j) >= tau — EVERY
-        # lower-id i counts, dropped or not (no greedy chaining)
-        for i in range(m - 1):
-            dots = np.cumsum(mat[i] * mat[i + 1 :], axis=1)[:, -1]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (nrm[i] * nrm[i + 1 :])
-            dropped[i + 1 :] |= cos >= tau  # nan (zero-norm) fails, like NULL
-        return pd.DataFrame({"_dropped_id": ids[dropped]})
+        dropped = VK.near_dup_ids(pdf[id_col].to_numpy(), pdf[vec_col], vec_col, tau)
+        return pd.DataFrame({"_dropped_id": dropped})
 
-    dropped = assigned.groupBy("cell").applyInPandas(_drop, "_dropped_id long")
+    id_t = df.schema[id_col].dataType.simpleString()
+    dropped = assigned.groupBy("cell").applyInPandas(_drop, f"_dropped_id {id_t}")
     return (
         assigned.join(
             dropped, assigned[id_col] == dropped["_dropped_id"], "left"

@@ -48,11 +48,15 @@ def get_spark(
     app_name: str = "database_query_processor_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-minded defaults."""
     cpus = _default_cpus()
+    # Default heap: half of physical RAM. Local-mode tasks run in the
+    # driver JVM; the rest is for Python workers and the page cache. A
+    # fixed size grows past RAM on a small host before GC forces a spill.
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     master = master or f"local[{cpus}]"
     # explicit None check — `or` would silently replace a passed 0
     # with the default instead of surfacing the invalid value
@@ -71,7 +75,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", driver_memory or f"{ram_mb // 2}m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")

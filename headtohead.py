@@ -130,7 +130,7 @@ def main() -> None:
     from database_query_processor_spark.session import get_spark
     from database_query_processor_spark.sources.det import parse_det_file
 
-    spark = get_spark(app_name="dqps-headtohead", driver_memory="32g")
+    spark = get_spark(app_name="dqps-headtohead")
     for t in TABLES:
         spec = parse_det_file(os.path.join(WORK, f"{t}.det"))
         # RandomDB emits a trailing \t per row -> read with a dummy

@@ -10,6 +10,6 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="dqps-tests", driver_memory="16g")
+    s = get_spark(app_name="dqps-tests")
     yield s
     s.stop()  # orderly JVM/temp-dir teardown instead of interpreter exit

@@ -661,9 +661,11 @@ def test_x02_minhash_plan_shape(spark):
 
 def test_minhash_signature_fused_fold_matches_reference(spark):
     """r11: the 64 permutation mins come from ONE aggregate() pass
-    over the hash array. Pin bit-equality against the definitional
-    per-permutation array_min(transform(...)) formulation, including
-    the empty-shingle case (all-NULL signature)."""
+    over the hash array. Pin bit-equality of the signature built from
+    the persisted 64-bit hashes against the definitional
+    per-permutation array_min(transform(...)) formulation over the
+    gram strings, including the empty-shingle case (all-NULL
+    signature)."""
     from pyspark.sql import functions as F
 
     from database_query_processor_spark.operators import dedup as D
@@ -679,7 +681,7 @@ def test_minhash_signature_fused_fold_matches_reference(spark):
         ["doc_id", "text"],
     )
     grams = D.doc_shingles(docs, "doc_id", "text")
-    fused = D._signature_from_shingles(grams)
+    fused = D.minhash_signature(docs, "doc_id", "text")
     ref_sig = F.array(
         *[
             F.array_min(
@@ -767,7 +769,7 @@ def test_x04_ngram_index_hashed_and_persisted(spark):
     four recomputations of the tokenize+shingle corpus pass), and the
     self-join key is a LONG, so no gram string reaches any exchange
     (guide §2.3). The pair metrics are unchanged under hash identity
-    (injective on all test corpora, artifacts/COLLISION_CHECK_r12)."""
+    (injective on all test corpora, test_xxhash64_shingle_identity)."""
     df = _specs()["x04_dedup_ngram_jaccard"].build(spark, SF)
     plan = explain_str(df, "simple")
     assert "InMemoryRelation" in plan, plan[:800]

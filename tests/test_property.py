@@ -548,3 +548,24 @@ def test_protoshim_unknown_fields_skipped():
     back = sm.StateResponse()
     back.ParseFromString(unknown + known + unknown)
     assert back.statusCode == 7
+
+
+@pytest.mark.parametrize("n", [3, 8])
+def test_xxhash64_shingle_identity(spark, n):
+    """CONTRACT: xxhash64 is injective on the corpus' distinct word
+    n-grams — the 3-grams that MinHash, n-gram Jaccard and containment
+    carry as 64-bit hashes (dedup.doc_shingle_hashes), and the 8-grams
+    by whose hash substring_dup_spans keys its duplicated-gram window.
+    With no collision, every result those operators derive from hashes
+    is bit-identical to the gram-string form."""
+    from pyspark.sql import functions as F
+
+    from database_query_processor_spark.catalog import load_table
+    from database_query_processor_spark.operators import dedup as D
+
+    docs = load_table(spark, SF, "documents")
+    grams = D.doc_shingles(docs, "doc_id", "text", n=n).select(F.explode("grams"))
+    hashes = D.doc_shingle_hashes(docs, "doc_id", "text", n=n).select(F.explode("hs64"))
+    n_grams = grams.distinct().count()
+    assert n_grams > 1000  # the corpus exercises the contract
+    assert hashes.distinct().count() == n_grams

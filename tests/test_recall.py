@@ -67,6 +67,11 @@ def test_ivf_kmeans_codebook_recall(planted):
     exact cosine top-k: the planted near-copy of the query shares the
     query's cell under any reasonable codebook, so it must appear in
     a 2-of-8-cell probe."""
+    # the fit input's layout is fixed by the operator, not inherited
+    # from the caller's partitioning (and so from the host's core count)
+    assert SIM._kmeans_codebook(
+        planted.repartition(1), "vec_id", "embedding", 8
+    ) == SIM._kmeans_codebook(planted.repartition(5), "vec_id", "embedding", 8)
     query_id = 7
     exact_ids = [
         r.vec_id
